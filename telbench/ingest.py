@@ -41,17 +41,29 @@ import pyarrow.parquet as pq
 
 from telbench.datagen import EVENT_TYPES, n_users
 
-PERIOD = 6                  # cycles per maintenance call
-LATE_FRAC = 0.03            # readings delivered LATE_TICKS ticks late
-LATE_TICKS = 2
-RESEND_FRAC = 0.05          # devices that re-send their previous reading
-BACKFILL_HOURS = 48
+# The traffic. Sourced: one reading per device per minute, the reference's
+# base poll interval (BASELINE.md, ``TelemetryToRaven/LoggerService.cs:19``),
+# and lateness of at most two ticks, its hard per-tick timeout at twice the
+# base interval (BASELINE.md, ``LoggerService.cs:35``); a re-sent reading
+# repeats its values, as the reference's retry-once wrapper re-appends a
+# record (SURVEY.md ST9, ``LoggerService.cs:62-73``). Not sourced, chosen for
+# the benchmark: how many readings are late or re-sent, how often
+# maintenance runs (the reference runs it nightly from cron) and the size
+# of the backfill. They set the dedup state, the watermark drops, the file
+# counts and the rewrite volume the per-layer metrics report.
+PERIOD = 6                  # cycles per maintenance call (chosen)
+LATE_FRAC = 0.03            # readings delivered LATE_TICKS ticks late (chosen)
+LATE_TICKS = 2              # hard timeout at 2x the base interval (sourced)
+RESEND_FRAC = 0.05          # devices that re-send their previous reading (chosen)
+BACKFILL_HOURS = 48         # hourly readings before the live ticks (chosen)
 LIVE_DAY = pd.Timestamp("2024-02-03")
 REL_TOL = 1e-9
 # Nominal seconds of one period on 4 cores; a run measures
 # round(--seconds / nominal) periods, at least one.
 NOMINAL_PERIOD_S = 18.0
 KEYS = ["meter_id", "series"]
+# How often the gateway asks the stream whether its batch has committed
+POLL_S = 0.005
 
 
 class Poller:
@@ -154,6 +166,7 @@ class Gateway:
         self.rows_landed = 0
         self.rows_seen = 0
         self.progress: dict[tuple[int, str], dict] = {}
+        self._last_key = None
         self.n_batches = 0
         self.failures: list[str] = []
 
@@ -165,7 +178,15 @@ class Gateway:
 
     def _poll_progress(self) -> None:
         # an idle trigger reports the id of the batch it waits for, so a
-        # progress is known by its batch id and its trigger start
+        # progress is known by its batch id and its trigger start.
+        # ``recentProgress`` costs one gateway call per progress kept, so it
+        # is read only when the last progress changed: a tight loop of it
+        # would take driver cores from the batches being timed.
+        last = self.query.lastProgress
+        key = last and (last["batchId"], last["timestamp"])
+        if key == self._last_key:
+            return
+        self._last_key = key
         for p in self.query.recentProgress:
             key = (p["batchId"], p["timestamp"])
             if key not in self.progress:
@@ -187,7 +208,7 @@ class Gateway:
                 raise RuntimeError(f"stream failed: {self.query.exception()}")
             if time.monotonic() > deadline:
                 raise TimeoutError(f"{name} not committed after {timeout} s")
-            time.sleep(0.002)
+            time.sleep(POLL_S)
             self._poll_progress()
         return time.time() - t0
 
@@ -196,7 +217,7 @@ class Gateway:
         that moves the watermark is followed by a no-data batch that evicts
         state; waiting for it keeps it out of the next batch's latency."""
         while self.query.status["isTriggerActive"]:
-            time.sleep(0.002)
+            time.sleep(POLL_S)
         self._poll_progress()
 
     def refresh(self, dates: list[str]) -> float:
@@ -292,6 +313,8 @@ def run_workload(run, workload: str) -> dict:
             run.traced_unit_begin()
             periods.append(loop.period(traced=True))
             run.traced_unit_end()
+        elif traced is None:
+            loop.period(traced=False)  # a warm-up period of a traced run
         else:
             (untraced if run.tracer is not None else periods).append(loop.period(traced=False))
     gw.stop()
@@ -301,29 +324,34 @@ def run_workload(run, workload: str) -> dict:
         gw.failures.extend(f"set-up: {w}" for w in setup_failures)
 
     ok = [c for c in loop.cycles if "read_s" in c]
+    commit_s = sum(c["commit_s"] for c in ok)
     result = {
         "attempted": loop.attempted,
         "failed": loop.failed,
         "failures": gw.failures,
         "end_to_end": {
-            "op_gmean_s": statistics.geometric_mean(c["commit_s"] for c in ok),
-            "read_gmean_s": statistics.geometric_mean(c["read_s"] for c in ok),
+            "op_gmean_s": run.gmean(c["commit_s"] for c in ok),
+            "read_gmean_s": run.gmean(c["read_s"] for c in ok),
             "lap_s": statistics.median(periods),
         },
         "detail": {
             "periods": n_periods,
             "batches": len(ok),
             "first_batch": first_batch,
-            "refresh_p50_s": round(statistics.median(c["refresh_s"] for c in ok), 4),
-            "maintenance_p50_s": round(statistics.median(m["took_s"] for m in loop.maint), 4),
-            "rows_per_s": round(sum(c["rows"] for c in ok) / sum(c["commit_s"] for c in ok), 1),
+            "refresh_p50_s": round(run.median(c["refresh_s"] for c in ok), 4),
+            "maintenance_p50_s": round(run.median(m["took_s"] for m in loop.maint), 4),
+            "rows_per_s": round(sum(c["rows"] for c in ok) / commit_s, 1) if commit_s else 0.0,
+            "cycle_s": [[round(c[k], 3) for k in ("commit_s", "refresh_s", "read_s")]
+                        for c in ok],
+            "maintenance_s": [round(m["took_s"], 3) for m in loop.maint],
         },
     }
     if run.tracer is not None:
         result["layers"] = _layers(gw, [c for c in ok if c["traced"]],
-                                   [m for m in loop.maint if m["traced"]], n_periods)
-        result["layers"]["trace.overhead_frac"] = (
-            statistics.mean(periods) / statistics.mean(untraced) - 1.0)
+                                   [m for m in loop.maint if m["traced"]], len(periods))
+        result["layers"]["trace.overhead_frac"] = run.overhead_frac(periods, untraced)
+        result["detail"]["overhead_periods"] = {
+            "traced": [round(t, 3) for t in periods], "untraced": [round(t, 3) for t in untraced]}
     return result
 
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 import hashlib
 import random
 import re
-import statistics
 import time
 
 from telbench import oracle
@@ -183,14 +182,16 @@ def _best(laps: list[dict], key: str) -> dict[str, float]:
 def run_workload(run, workload: str) -> dict:
     """Set-up (cold fixture and index builds in one untimed lap), then the
     timed laps (``Run.schedule``). ``lap_s`` is the sum of the queries'
-    best times over the traced (or, untraced, all) timed laps."""
+    best times over the traced (or, untraced, all) timed laps. Every lap,
+    the set-up lap too, counts its queries as attempted and each raised or
+    wrong result as failed."""
     loop = QueryLoop(run)
     run.fill_oracles(loop.names)
     run.start_session()
-    loop.lap(check=False)
+    cold = loop.lap(check=False)
     run.begin_timed()
     n_laps = run.units(NOMINAL_LAP_S)
-    laps, untraced = [], []
+    laps, untraced, warm = [], [], []
     if run.tracer is not None:
         run.tracer.enabled = False
     for traced in run.schedule(n_laps):
@@ -198,27 +199,33 @@ def run_workload(run, workload: str) -> dict:
             run.traced_unit_begin()
             laps.append(loop.lap(check=True))
             run.traced_unit_end()
+        elif traced is None:
+            warm.append(loop.lap(check=True))
         else:
             (untraced if run.tracer is not None else laps).append(loop.lap(check=True))
     every = laps + untraced
     op, read, total = (_best(laps, key) for key in ("op_s", "read_s", "total_s"))
     result = {
-        "attempted": sum(lap["attempted"] for lap in every),
-        "failed": sum(lap["failed"] for lap in every),
+        "attempted": sum(lap["attempted"] for lap in [cold, *warm, *every]),
+        "failed": sum(lap["failed"] for lap in [cold, *warm, *every]),
         "failures": sorted(set(loop.failures)),
         "end_to_end": {
-            "op_gmean_s": statistics.geometric_mean(op.values()),
-            "read_gmean_s": statistics.geometric_mean(read.values()),
+            "op_gmean_s": run.gmean(op.values()),
+            "read_gmean_s": run.gmean(read.values()),
             "lap_s": sum(total.values()),
         },
         "detail": {"laps": n_laps, "samples": sum(len(lap["op_s"]) for lap in every),
                    "plan_digest": loop.plan_digest(),
+                   "setup_lap_s": round(cold["lap_s"], 3),
                    "lap_times": [round(lap["lap_s"], 3) for lap in every],
                    "check_s": round(loop.check_s, 3)},
     }
     if run.tracer is not None:
         n, checked = len(laps), len(every)
-        plain = [lap["lap_s"] for lap in untraced]
+        traced_s = [lap["lap_s"] for lap in laps]
+        plain_s = [lap["lap_s"] for lap in untraced]
+        result["detail"]["overhead_laps"] = {
+            "traced": [round(t, 3) for t in traced_s], "untraced": [round(t, 3) for t in plain_s]}
         result["layers"] = {
             "plans.scans": loop.shape["scans"] / checked,
             "plans.exchanges": loop.shape["exchanges"] / checked,
@@ -227,8 +234,7 @@ def run_workload(run, workload: str) -> dict:
             "spark.catalyst.optimization_s": loop.catalyst["optimization"] / n,
             "spark.catalyst.planning_s": loop.catalyst["planning"] / n,
             "spark.exec.wall_s": sum(sum(lap["read_s"].values()) for lap in laps) / n,
-            "trace.overhead_frac": statistics.mean(lap["lap_s"] for lap in laps)
-            / statistics.mean(plain) - 1.0,
+            "trace.overhead_frac": run.overhead_frac(traced_s, plain_s),
             "calls": {"spark.catalyst": loop.trackers_read},
         }
     return result

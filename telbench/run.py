@@ -26,6 +26,7 @@ import os
 import re
 import shutil
 import signal
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -36,25 +37,32 @@ WORKLOADS = ("registry_queries", "ingest_stream")
 SF = 0.01
 DATA_SEED = 42
 
-# The layers each workload must reach; a traced run reports their calls
-# (spans for the program's layers, trackers read for Catalyst, jobs for
-# execution, micro-batches for streaming).
+# The layers the traced units of each workload must reach (spans for the
+# program's layers, trackers read for Catalyst, jobs for execution,
+# micro-batches for streaming), and the layers its set-up must reach while
+# it builds fixtures, indexes and the stream. A traced run reports the two
+# apart, so a layer that only set-up calls is not taken for one the timed
+# units use.
 WORKLOAD_LAYERS = {
     "registry_queries": (
-        "session", "tables", "plans", "sources", "functions.cachelife",
+        "tables", "plans", "sources", "functions.cachelife",
         "operators.aggregations", "operators.battery", "operators.chunking",
-        "operators.clustering", "operators.controllers", "operators.counters",
-        "operators.dedup", "operators.ingest", "operators.joins",
-        "operators.maintenance", "operators.multimodal", "operators.opq_rotations",
+        "operators.controllers", "operators.counters", "operators.dedup",
+        "operators.ingest", "operators.joins", "operators.multimodal",
+        "operators.opq_rotations",
         "operators.packing", "operators.profiling", "operators.sampling",
         "operators.scheduling", "operators.sharding", "operators.similarity",
         "operators.sketches", "operators.textops", "operators.tokenize",
         "operators.tsmatch", "operators.urlops", "spark.catalyst", "spark.exec",
     ),
     "ingest_stream": (
-        "session", "streaming", "operators.ingest", "operators.maintenance",
+        "streaming", "operators.ingest", "operators.maintenance",
         "operators.aggregations", "spark.exec",
     ),
+}
+SETUP_LAYERS = {
+    "registry_queries": ("session", "tables", "operators.clustering", "operators.maintenance"),
+    "ingest_stream": ("session", "streaming", "operators.ingest", "operators.maintenance"),
 }
 
 END_TO_END = {
@@ -273,15 +281,18 @@ class Run:
     def units(self, nominal_s: float) -> int:
         return max(1, round(self.seconds / nominal_s))
 
-    def schedule(self, n: int) -> list[bool]:
-        """Which of the timed units are traced. An untraced run traces
-        none; a traced run pairs each traced unit with an untraced one in
-        ABBA order (untraced first), so ``trace.overhead_frac`` compares
-        neighbours and a warm-up drift cancels over pairs."""
+    def schedule(self, n: int) -> list[bool | None]:
+        """What each timed unit is: traced (True), untraced (False), or an
+        untraced warm-up that no figure uses (None). An untraced run traces
+        none. A traced run first runs one warm-up unit, so the drift right
+        after set-up does not land on the first pair, then at least two
+        pairs of an untraced and a traced unit in ABBA order (untraced
+        first), so ``trace.overhead_frac`` compares neighbours and a linear
+        drift cancels over the pairs."""
         if self.tracer is None:
             return [False] * n
-        pairs = [(False, True) if i % 2 == 0 else (True, False) for i in range(n)]
-        return [t for pair in pairs for t in pair]
+        pairs = [(False, True) if i % 2 == 0 else (True, False) for i in range(max(n, 2))]
+        return [None] + [t for pair in pairs for t in pair]
 
     def begin_timed(self) -> None:
         self.detail["setup_wall_s"] = round(_seconds_since_process_start(), 3)
@@ -330,6 +341,29 @@ class Run:
         plan = plan.replace(fixture_tag, "<data>")
         plan = re.sub(r"RDD\[\d+\] at [^,\]]*", "RDD", plan)
         return re.sub(r"#\d+|plan_id=\d+|codegen id : \d+|\*\(\d+\)", "#", plan)
+
+    # ---- summaries the workloads report ----------------------------------
+    @staticmethod
+    def gmean(values) -> float:
+        """The geometric mean, or 0 when there is no sample because every
+        operation failed (the run then reports ``correct: false``)."""
+        values = list(values)
+        return statistics.geometric_mean(values) if values else 0.0
+
+    @staticmethod
+    def median(values) -> float:
+        values = list(values)
+        return statistics.median(values) if values else 0.0
+
+    @staticmethod
+    def overhead_frac(traced_s: list[float], plain_s: list[float]) -> float:
+        """Mean traced unit over mean untraced unit of the same traced run,
+        minus 1; 0 when either side has no completed unit. The event log is
+        on for the whole traced run, so its cost is on both sides and not in
+        the figure."""
+        if not traced_s or not plain_s:
+            return 0.0
+        return statistics.mean(traced_s) / statistics.mean(plain_s) - 1.0
 
     # ---- metrics --------------------------------------------------------
     def peak_rss_mb(self) -> float:
@@ -395,14 +429,19 @@ class Run:
         )
         for k, v in ex.items():
             out[f"spark.exec.{k}"] = v / n
-        # calls per layer over the whole run: some layers are reached only
-        # while set-up builds fixtures and indexes
+        # calls per layer in the traced units, and apart from them the
+        # calls set-up made (before the first timed unit, after install)
         calls = layers.pop("calls", {})
         out.update(layers)
-        for s in tr.spans:
-            calls[s[0]] = calls.get(s[0], 0) + 1
+        for since, until, _, _ in self.traced_units:
+            for s in tr.spans[since:until]:
+                calls[s[0]] = calls.get(s[0], 0) + 1
         calls["spark.exec"] = int(out["spark.exec.jobs"] * n)
         self.detail["layer_calls"] = dict(sorted(calls.items()))
+        setup_calls: dict[str, int] = {}
+        for s in setup:
+            setup_calls[s[0]] = setup_calls.get(s[0], 0) + 1
+        self.detail["setup_layer_calls"] = dict(sorted(setup_calls.items()))
         wall = out["spark.exec.wall_s"]
         out["spark.exec.busy_frac"] = out["spark.exec.executor_run_s"] / (wall * self.cores) if wall else 0.0
         self.detail["jobs_total"] = len(jobs)

@@ -118,7 +118,10 @@ class Tracer:
 
     def install(self) -> None:
         """Wrap every layer's public functions, then import the plans
-        and rebind any name that still holds an unwrapped original."""
+        and rebind any name that still holds an unwrapped original. The
+        calls the imports make (the registries build some oracles when they
+        are imported) record no spans."""
+        self.enabled = False
         originals: dict[int, object] = {}
         for layer, names in layer_modules().items():
             for modname in names:
@@ -142,6 +145,7 @@ class Tracer:
                 wrapped = originals.get(id(obj))
                 if wrapped is not None and inspect.isfunction(obj):
                     setattr(mod, attr, wrapped)
+        self.enabled = True
 
     def self_times(self, since: int = 0, until: int | None = None) -> dict[tuple[str, str], list]:
         """(layer, function) -> [self seconds, calls, inclusive seconds]

@@ -23,7 +23,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 sys.path.insert(0, ROOT)
 
 from telbench import eventlog, oracle  # noqa: E402
-from telbench.run import END_TO_END, WORKLOAD_LAYERS, WORKLOADS, _per_layer  # noqa: E402
+from telbench.run import (  # noqa: E402
+    END_TO_END, SETUP_LAYERS, WORKLOAD_LAYERS, WORKLOADS, Run, _per_layer,
+)
 
 with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     BENCH = json.load(f)
@@ -72,7 +74,7 @@ def test_benchmark_json_names_what_the_runs_emit():
     assert [w["name"] for w in BENCH["workloads"]] == list(WORKLOADS)
     assert {m["name"]: m["unit"] for m in BENCH["end_to_end"]} == END_TO_END
     assert {m["name"]: m["unit"] for m in BENCH["per_layer"]} == _per_layer()
-    assert set(WORKLOAD_LAYERS) == set(WORKLOADS)
+    assert set(WORKLOAD_LAYERS) == set(SETUP_LAYERS) == set(WORKLOADS)
 
 
 @pytest.mark.parametrize("workload", WORKLOADS)
@@ -99,7 +101,23 @@ def test_traced_run_reaches_every_layer_of_its_workload(workload):
     calls = detail["layer_calls"]
     missing = [layer for layer in WORKLOAD_LAYERS[workload] if calls.get(layer, 0) <= 0]
     assert not missing, calls
+    setup = detail["setup_layer_calls"]
+    missing = [layer for layer in SETUP_LAYERS[workload] if setup.get(layer, 0) <= 0]
+    assert not missing, setup
     assert "trace.overhead_frac" in res["metrics"]
+
+
+def test_schedule_and_summaries():
+    run = Run(ROOT, "registry_queries", 1, 12, trace=False)
+    assert run.schedule(2) == [False, False]
+    run.tracer = object()
+    assert run.schedule(1) == [None, False, True, True, False]
+    assert run.schedule(3) == [None, False, True, True, False, False, True]
+    assert Run.overhead_frac([1.1, 1.1], [1.0, 1.0]) == pytest.approx(0.1)
+    assert Run.overhead_frac([], [1.0]) == 0.0
+    # a run in which every operation failed still reports its figures
+    assert Run.gmean([]) == 0.0 and Run.median([]) == 0.0
+    assert Run.gmean([1.0, 4.0]) == pytest.approx(2.0)
 
 
 def test_plans_are_identical_with_tracing_on_and_off():
